@@ -186,10 +186,7 @@ def q_ri_semi_count(spark, sf_dir):
 
     li = _t(spark, sf_dir, "lineitem")
     o = _t(spark, sf_dir, "orders")
-    # distinct_ref=False: o_orderkey is the orders PK, so the semi join
-    # needs no pre-dedup shuffle of the reference side (r6)
-    return ri_valid(li, "l_orderkey", o, "o_orderkey", broadcast_ref=False,
-                    distinct_ref=False).agg(
+    return ri_valid(li, "l_orderkey", o, "o_orderkey", broadcast_ref=False).agg(
         F.count(F.lit(1)).cast("bigint").alias("valid_rows"))
 
 
@@ -349,14 +346,12 @@ def q_quality_counts(spark, sf_dir):
 
 
 def q_fingerprint(spark, sf_dir):
+    from jesse_spark.operators.text import doc_fingerprint
     from jesse_spark.session import ensure_parallelism
 
     # same single-scan-task consideration as q_token_counts (r6)
     d = ensure_parallelism(_t(spark, sf_dir, "documents"))
-    return d.select(
-        "doc_id",
-        F.md5(F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]+", "")).alias("fp"),
-    )
+    return d.select("doc_id", doc_fingerprint(F.col("text")).alias("fp"))
 
 
 def q_embed_topk(spark, sf_dir):
@@ -373,16 +368,25 @@ def q_embed_topk(spark, sf_dir):
 
 # ---- approximate / LSH operators, oracled against exact all-pairs SQL -----
 #
-# Every LSH family below is tuned so its recall on the (fixed,
-# deterministic) test tables is exactly 1 — r=1 minhash bands, 16
-# hyperplane tables, pigeonholed simhash chunks — so the verified
-# output EQUALS the exact all-pairs answer and DuckDB can oracle it.
-# The LSH pruning itself stays real (bucketed, capped, sub-quadratic).
+# Every LSH family below prunes for real (bucketed, capped,
+# sub-quadratic), so its verified output equals the exact all-pairs
+# answer only where its candidates cover every true pair.  Nothing
+# guarantees that: minhash candidates are a heuristic (see
+# q_minhash_near_dups), hyperplane candidates are probabilistic, and
+# simhash's pigeonholed chunks cover every hamming ≤ 3 pair only while
+# the shared chunk's bucket stays under the 1000-id cap.  On the
+# sf0.001 and sf0.01 tables every family finds every pair; on sf0.1
+# minhash misses 3 of the 256 all-pairs rows, and simhash, with one
+# bucket of 1639 ids, misses 10261 of 166267.
 def q_minhash_near_dups(spark, sf_dir):
     from jesse_spark.operators.dedup import jaccard_verify, minhash_lsh_candidates
 
     d = _t(spark, sf_dir, "documents")
-    # r=1 bands: a pair at jaccard j is missed w.p. (1-j)^32 ≤ 2.4e-10
+    # the signature is ONE positional min-hash repeated num_perm times
+    # (see minhash_signatures), so all 32 r=1 bands agree and two docs
+    # are candidates iff their positional min-hashes are equal: a pair
+    # above the threshold whose min-hashes differ is missed, with no
+    # (1-j)^bands bound on how often
     cand = minhash_lsh_candidates(d, "text", "doc_id", num_perm=32, bands=32,
                                   shingle_mode="token")
     return jaccard_verify(cand, d, "text", "doc_id", threshold=0.5,
@@ -394,10 +398,10 @@ def q_simhash_near_dups(spark, sf_dir):
     from jesse_spark.operators.dedup import simhash_candidates
 
     d = _t(spark, sf_dir, "documents")
-    # pigeonhole banding is exact for hamming ≤ 3; md5 token hashing is
-    # bit-for-bit reproducible in the DuckDB oracle
-    return simhash_candidates(d, "text", "doc_id", max_hamming=3,
-                              hash_fn="md5").select(
+    # pigeonhole banding finds every hamming ≤ 3 pair that shares an
+    # uncapped bucket; md5 token hashing is bit-for-bit reproducible in
+    # the DuckDB oracle
+    return simhash_candidates(d, "text", "doc_id", max_hamming=3).select(
         "id_a", "id_b", F.col("hamming").cast("bigint").alias("hamming"))
 
 
@@ -602,7 +606,8 @@ cdf AS (
 SELECT CAST(floor(max(abs(ca - cb)) * 1000000 + 0.5) AS BIGINT) AS ks_x1e6 FROM cdf
 """
 
-# exact all-pairs token-bigram Jaccard (mirrors token_shingles(text, 2))
+# exact all-pairs token-bigram Jaccard (mirrors the shingle_mode="token"
+# shingles: with_shingles(mode="token", k=5) slices token bigrams)
 _MINHASH_SQL = r"""
 WITH d AS (
   SELECT doc_id, string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS toks
@@ -621,7 +626,7 @@ WITH d AS (
 SELECT id_a, id_b, round(j, 4) AS jaccard FROM pairs WHERE j >= 0.5
 """
 
-# bit-for-bit simhash64(hash_fn='md5') recomputation + all-pairs hamming
+# bit-for-bit recomputation of the md5 simhash signature + all-pairs hamming
 _SIMHASH_SQL = r"""
 WITH d AS (
   SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm

@@ -2,16 +2,16 @@
 
 No jesse analog (its uniqueItems is per-array); these are the
 table-scale dedup family a 100 TB corpus needs.  All of them are pure
-DataFrame plans built from JVM-side expressions — the MinHash/SimHash
-signatures are higher-order-function expressions over shingle arrays,
-never Python loops.
+DataFrame plans; the MinHash and SimHash signatures are JVM-side
+expressions, never Python loops (the hyperplane signatures are one
+numpy matmul per Arrow batch).
 
 Scale notes:
 - exact dedup shuffles one (hash, id) pair per row with map-side
   combine; the full text never shuffles.
-- MinHash-LSH shuffles one (band, band_hash, id) triple per row per
-  band (b × n rows of a few bytes), then joins only within buckets —
-  the classic sub-quadratic near-dup plan.
+- every LSH family shuffles small (bucket key, id) rows and pairs only
+  within capped buckets through :func:`capped_bucket_pairs` — the
+  classic sub-quadratic near-dup plan.
 - candidate verification (exact Jaccard) touches only candidate pairs.
 """
 
@@ -42,40 +42,39 @@ def shingles(text: Column, k: int = 5) -> Column:
     )
 
 
+def _stage_shingles(df: DataFrame, text_col: str, k: int, mode: str,
+                    out: str, per_slice) -> DataFrame:
+    """Distinct shingles of ``text_col`` as column ``out``, one
+    ``per_slice(parts_slice, sep)`` expression per position.
+
+    ``mode="char"`` slices k characters; ``mode="token"`` slices
+    ``max(k // 2, 2)`` whitespace tokens.  The split parts are staged
+    behind a projection boundary first, so each slice is O(k) over a
+    bound attribute: slicing the split expression inline re-evaluates
+    the whole regexp_replace+split chain for EVERY position (O(len²)
+    per row, measured 2.5-3.5 s over 50k docs at sf1.0 for a ~0.3 s
+    linear pass), and ``substr(i, k)`` on a UTF8String seeks from the
+    start.  A null text stages as ``[""]``, so every null or empty doc
+    yields the same single-element set."""
+    if mode == "token":
+        n, sep = max(k // 2, 2), " "
+    else:
+        n, sep = k, ""
+    d = df.withColumn("_parts", F.coalesce(
+        F.split(normalized(F.col(text_col)), sep), F.array(F.lit(""))))
+    cnt = F.greatest(F.size(F.col("_parts")) - (n - 1), F.lit(1))
+    return d.withColumn(out, F.array_distinct(F.transform(
+        F.sequence(F.lit(1), cnt),
+        lambda i: per_slice(F.slice(F.col("_parts"), i, n), sep),
+    ))).drop("_parts")
+
+
 def with_shingles(df: DataFrame, text_col: str, *, k: int = 5,
                   mode: str = "char", out: str = "sh") -> DataFrame:
-    """Stage shingles as a column: char array first (one split per
-    row), then O(k) slices — avoids both the O(n²) substr seek and
-    CollapseProject re-evaluation."""
-    if mode == "token":
-        # same staging discipline as char mode: materialize the token
-        # array behind a projection boundary so each n-gram slice is
-        # O(n-gram) over a bound attribute.  Inlining token_shingles
-        # directly re-evaluates the full regexp_replace+split chain for
-        # EVERY position (the split sits inside the transform lambda) —
-        # O(len²) per row, measured 2.5-3.5 s over 50k docs at sf1.0
-        # for what is a ~0.3 s linear pass.
-        n_gram = max(k // 2, 2)
-        d = df.withColumn("_toks", F.split(F.trim(normalized(F.col(text_col))), " "))
-        cnt = F.greatest(F.size(F.col("_toks")) - (n_gram - 1), F.lit(1))
-        d = d.withColumn(
-            out,
-            F.array_distinct(F.transform(
-                F.sequence(F.lit(0), cnt - 1),
-                lambda i: F.concat_ws(" ", F.slice(F.col("_toks"), i + 1, n_gram)),
-            )),
-        )
-        return d.drop("_toks")
-    d = df.withColumn("_chars", F.split(normalized(F.col(text_col)), ""))
-    n = F.greatest(F.size(F.col("_chars")) - (k - 1), F.lit(1))
-    d = d.withColumn(
-        out,
-        F.array_distinct(F.transform(
-            F.sequence(F.lit(1), n),
-            lambda i: F.concat_ws("", F.slice(F.col("_chars"), i, k)),
-        )),
-    )
-    return d.drop("_chars")
+    """Distinct shingle strings as ``array<string>`` (see
+    :func:`_stage_shingles` for the staging and the modes)."""
+    return _stage_shingles(df, text_col, k, mode, out,
+                           lambda s, sep: F.concat_ws(sep, s))
 
 
 def hashed_shingles(df: DataFrame, text_col: str, *, k: int = 5,
@@ -90,40 +89,9 @@ def hashed_shingles(df: DataFrame, text_col: str, *, k: int = 5,
     are single chars), so set sizes and intersections match unless two
     distinct shingles collide in 64 bits (~1e-16 per pair).  NOT for
     minhash_signatures, whose ``hash(string, i)`` values are pinned
-    bit-for-bit.
-
-    Null/empty texts keep the string formulation's degenerate set: the
-    split is coalesced to ``[""]``, so every such doc yields the same
-    single-element set (mirroring concat_ws(NULL) → "")."""
-    if mode == "token":
-        n_gram = max(k // 2, 2)
-        d = df.withColumn("_parts", F.coalesce(
-            F.split(F.trim(normalized(F.col(text_col))), " "),
-            F.array(F.lit(""))))
-        cnt = F.greatest(F.size(F.col("_parts")) - (n_gram - 1), F.lit(1))
-        hashed = F.transform(
-            F.sequence(F.lit(0), cnt - 1),
-            lambda i: F.xxhash64(F.slice(F.col("_parts"), i + 1, n_gram)))
-    else:
-        d = df.withColumn("_parts", F.coalesce(
-            F.split(normalized(F.col(text_col)), ""), F.array(F.lit(""))))
-        n = F.greatest(F.size(F.col("_parts")) - (k - 1), F.lit(1))
-        hashed = F.transform(
-            F.sequence(F.lit(1), n),
-            lambda i: F.xxhash64(F.slice(F.col("_parts"), i, k)))
-    return d.withColumn(out, F.array_distinct(hashed)).drop("_parts")
-
-
-def token_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-grams."""
-    toks = F.split(F.trim(normalized(text)), " ")
-    cnt = F.greatest(F.size(toks) - (n - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), cnt - 1),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-        )
-    )
+    bit-for-bit."""
+    return _stage_shingles(df, text_col, k, mode, out,
+                           lambda s, _: F.xxhash64(s))
 
 
 # ---------------------------------------------------------------------------
@@ -172,85 +140,48 @@ def drop_exact_duplicates(df: DataFrame, text_col: str, id_col: str) -> DataFram
 
 
 # ---------------------------------------------------------------------------
-# shared: capped bucket → pair explosion
+# shared: capped bucket → pair self-join (every LSH family)
 # ---------------------------------------------------------------------------
-def bucket_pairs(buckets: DataFrame, ids_col: str = "ids") -> DataFrame:
-    """Explode a bucketed id-list column into ordered (id_a < id_b)
-    pairs.  The caller is expected to have capped the list (slice) so a
-    pathological hot bucket cannot go quadratic — this is the one shape
-    shared by every LSH family (MinHash bands, SimHash chunks,
-    hyperplane buckets)."""
-    ids = F.col(ids_col)
-    return buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.sequence(F.lit(1), F.size(ids) - 1),
-                    lambda i: F.transform(
-                        F.sequence(i + 1, F.size(ids)),
-                        lambda j: F.struct(
-                            F.element_at(ids, i).alias("id_a"),
-                            F.element_at(ids, j).alias("id_b"),
-                        ),
-                    ),
-                )
-            )
-        ).alias("p")
-    ).select("p.id_a", "p.id_b")
-
-
-def _capped_id_buckets(tagged: DataFrame, key_cols: list[str], *,
-                       max_bucket: int) -> DataFrame:
-    """Bucket key → sorted id list of AT MOST max_bucket ids.
-
-    Membership is capped BEFORE the aggregation: a row_number window
-    over the bucket key (ordered by id — keeps the survivor set the
-    deterministic min ids) filtered to ``<= max_bucket``, then the
-    bounded collect.  The window's sort is spillable; an uncapped
-    ``collect_list`` buffer on a degenerate hot bucket (billions of
-    identical texts → one bucket) is a single-reducer OOM at 100 TB."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*key_cols).orderBy("id")
-    capped = tagged.withColumn("_rn", F.row_number().over(w)).filter(
-        F.col("_rn") <= max_bucket)
-    return (
-        capped.groupBy(*key_cols)
-        .agg(F.sort_array(F.collect_list("id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-
-
 def capped_bucket_pairs(tagged: DataFrame, key_cols: list[str], *,
                         max_bucket: int) -> DataFrame:
     """Ordered (id_a < id_b) pairs of ids sharing a bucket key, capped
-    at ``max_bucket`` members per bucket — the codegen formulation of
-    ``bucket_pairs(_capped_id_buckets(...))``.
+    at ``max_bucket`` members per bucket — the one pairing join of the
+    MinHash, SimHash and hyperplane LSH families.  Every other column
+    ``c`` of ``tagged`` rides along as ``c_a`` / ``c_b``.
 
-    Same cap discipline (row_number window ordered by id keeps the
-    deterministic min-id survivors), but pairs come from a within-bucket
-    self-join with ``id_a < id_b`` instead of collect_list + nested
-    transform/explode: the pair loop runs in whole-stage codegen rather
-    than interpreted HOF lambdas, and the collect_list aggregation
-    buffer disappears.  SHUFFLE_MERGE hint: spillable, never broadcast
-    (bucket membership scales with the corpus).  Pair-set equality with
-    the exploded formulation is pinned by tests/test_dedup_similarity.py
-    and was verified at 735k (minhash, sf1.0) and 14.3M (hyperplane,
-    10x-duplicated corpus) pair volumes — at the 14.3M volume this is
-    ~2.4x faster; the ~400M-pair regime where AQE-coalesced SMJ pairing
-    degenerated (see minhash_lsh_candidates) only arises with a true
-    multi-permutation signature, which no caller ships."""
+    Preconditions (all callers meet them): bucket keys are non-null —
+    a null key never pairs — and ``(key, id)`` rows are unique — a
+    duplicated ``(key, id)`` emits no self-pair but takes two cap slots.
+
+    Membership is capped BEFORE pairing: a row_number window over the
+    bucket key ordered by id keeps the deterministic min-id survivors
+    (the window's sort is spillable; an uncapped bucket of billions of
+    identical texts would otherwise go quadratic on one reducer).
+    Pairs come from a within-bucket self-join with ``id_a < id_b``, so
+    the pair loop runs in whole-stage codegen instead of collect_list +
+    interpreted nested-transform explode (pair-set equality with that
+    formulation is pinned by tests/test_dedup_similarity.py; ~2.4x
+    faster at 14.3M pairs).  SHUFFLE_MERGE: spillable, never broadcast
+    (bucket membership scales with the corpus); both sides share one
+    exchange subtree, which AQE reuses at runtime.  The ~400M-pair
+    regime where AQE-coalesced SMJ pairing degenerated (see
+    minhash_lsh_candidates) only arises with a true multi-permutation
+    signature, which no caller ships."""
     from pyspark.sql import Window
 
     w = Window.partitionBy(*key_cols).orderBy("id")
     capped = tagged.withColumn("_rn", F.row_number().over(w)).filter(
         F.col("_rn") <= max_bucket).drop("_rn")
-    x = capped.select(*key_cols, F.col("id").alias("id_a"))
-    y = capped.select(*key_cols, F.col("id").alias("id_b"))
+    extra = [c for c in capped.columns if c not in key_cols and c != "id"]
+
+    def side(s: str) -> DataFrame:
+        return capped.select(*key_cols, F.col("id").alias(f"id_{s}"),
+                             *[F.col(c).alias(f"{c}_{s}") for c in extra])
+
     return (
-        x.hint("SHUFFLE_MERGE").join(y, key_cols)
+        side("a").hint("SHUFFLE_MERGE").join(side("b"), key_cols)
         .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
+        .select("id_a", "id_b", *[f"{c}_{s}" for s in "ab" for c in extra])
     )
 
 
@@ -393,82 +324,27 @@ def jaccard_verify(
 # ---------------------------------------------------------------------------
 # 3. SimHash (64-bit) + hamming candidates
 # ---------------------------------------------------------------------------
-def simhash64(text: Column, *, hash_fn: str = "md5") -> Column:
-    """64-bit SimHash of the token set: per bit, sum +1/-1 token votes;
-    bit set when the sum is positive.  Built as one aggregate over the
-    token array (JVM).
-
-    ``hash_fn``:
-    - ``"md5"`` (default): bit b of a token's 64-bit hash is bit
-      ``b % 4`` of hex digit ``b // 4`` of ``md5(token)``.  md5 is
-      available in every engine, so the whole simhash — and therefore
-      the near-dup pair set — is reproducible in ANSI SQL (the DuckDB
-      oracle recomputes it bit-for-bit).
-    - ``"xxhash64"``: one xxhash64 per token (cheapest; Spark-only).
-    """
-    toks = F.array_distinct(F.split(F.trim(normalized(text)), " "))
-    if hash_fn == "xxhash64":
-        tok_bits = F.transform(
-            toks,
-            lambda t: F.transform(
-                F.sequence(F.lit(0), F.lit(63)),
-                lambda b: F.call_function(
-                    "shiftright", F.xxhash64(t), b.cast("int")
-                ).bitwiseAND(F.lit(1)).cast("int"),
-            ),
-        )
-    else:
-        # 16 hex digits → 4 bits each (literal shifts keep this in
-        # whole-stage codegen; one md5 per token, evaluated once)
-        tok_bits = F.transform(
-            toks,
-            lambda t: F.flatten(
-                F.transform(
-                    F.transform(
-                        F.slice(F.split(F.md5(t), ""), 1, 16),
-                        lambda c: F.conv(c, 16, 10).cast("int"),
-                    ),
-                    lambda d: F.array(*[
-                        F.shiftright(d, s).bitwiseAND(F.lit(1)) for s in range(4)
-                    ]),
-                )
-            ),
-        )
-    # per-token bit vector → per-bit ±1 vote vector, summed via aggregate
-    votes = F.aggregate(
-        tok_bits,
-        F.array_repeat(F.lit(0).cast("long"), 64),
-        lambda acc, bits: F.zip_with(
-            acc, bits, lambda x, y: x + 2 * y.cast("long") - 1
-        ),
-    )
-    return F.aggregate(
-        F.zip_with(
-            votes,
-            F.sequence(F.lit(0), F.lit(63)),
-            lambda v, b: F.when(
-                v > 0,
-                F.call_function("shiftleft", F.lit(1).cast("long"), b.cast("int")),
-            ).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc.bitwiseOR(x),
-    )
-
-
 def _simhash_md5_exploded(df: DataFrame, text_col: str,
                           id_col: str) -> DataFrame:
-    """(id, sim) via explode + 64 scalar conditional sums — bit-for-bit
-    :func:`simhash64` with ``hash_fn="md5"`` (pinned by test), ~30%
-    faster: per token the column expression built two 64-element bit
-    arrays plus a fold allocation, while this path computes 4 chunk
-    ints from the md5 hex and lets a codegen HashAggregate keep the 64
+    """(id, sim): 64-bit SimHash of each text's distinct-token set — per
+    bit, sum +1/-1 token votes; the bit is set when the sum is
+    positive.  Bit b of a token's hash is bit ``b % 4`` of hex digit
+    ``b // 4`` of ``md5(token)``: md5 is available in every engine, so
+    the signature, and therefore the near-dup pair set, is
+    reproducible in ANSI SQL (the DuckDB oracle recomputes it
+    bit-for-bit).
+
+    Computed as explode + 64 scalar conditional sums: 4 chunk ints per
+    token from the md5 hex, and a codegen HashAggregate keeps the 64
     vote counters (bit b = bit ``4*(3-(b//4)%4)+b%4`` of chunk
-    ``b//16``, i.e. bit b%4 of hex digit b//4 — the documented md5 bit
-    mapping).  explode_outer dodges InferFiltersFromGenerate cloning
-    the token expression into a pre-repartition single-task filter;
-    null texts are dropped up front (their null signature could never
-    produce a pair: null chunks match nothing downstream)."""
+    ``b//16``).  Bit-for-bit equal to the per-row higher-order-function
+    formulation kept in tests/test_dedup_similarity.py, and ~30%
+    faster: per token that expression builds two 64-element bit arrays
+    plus a fold allocation.  explode_outer dodges
+    InferFiltersFromGenerate cloning the token expression into a
+    pre-repartition single-task filter; null texts are dropped up front
+    (their null signature could never produce a pair: null chunks
+    match nothing downstream)."""
     toks = F.array_distinct(F.split(F.trim(normalized(F.col(text_col))), " "))
     t = (df.filter(F.col(text_col).isNotNull())
          .select(F.col(id_col).alias("id"), F.explode_outer(toks).alias("tok")))
@@ -494,25 +370,21 @@ def _simhash_md5_exploded(df: DataFrame, text_col: str,
 
 
 def simhash_candidates(df: DataFrame, text_col: str, id_col: str,
-                       *, max_hamming: int = 3, max_bucket: int = 1000,
-                       hash_fn: str = "md5") -> DataFrame:
+                       *, max_hamming: int = 3, max_bucket: int = 1000) -> DataFrame:
     """Near-dup pairs by SimHash: band the 64 bits into 4 × 16-bit
     chunks (pigeonhole: hamming ≤ 3 ⇒ at least one chunk identical),
-    bucket on (chunk_idx, chunk), pair within capped buckets, verify
-    exact hamming ≤ k via bit_count(xor).
+    bucket on (chunk_idx, chunk), pair within buckets capped at
+    ``max_bucket`` ids (:func:`capped_bucket_pairs`), verify exact
+    hamming ≤ ``max_hamming`` via bit_count(xor).  A pair sharing
+    several chunks is emitted once.
 
-    Buckets are capped at ``max_bucket`` ids (same discipline as the
-    MinHash path): a degenerate corpus where thousands of near-empty
-    texts collapse onto one chunk value stays bounded instead of going
-    quadratic."""
+    The cap binds on a degenerate corpus where thousands of near-empty
+    texts collapse onto one chunk value; pairs whose only shared chunk
+    is a capped-out bucket are dropped."""
     from jesse_spark.session import ensure_parallelism
 
     df = ensure_parallelism(df)  # 64-bit vote aggregate is CPU-heavy
-    if hash_fn == "md5":
-        sh = _simhash_md5_exploded(df, text_col, id_col)
-    else:
-        sh = df.select(F.col(id_col).alias("id"),
-                       simhash64(F.col(text_col), hash_fn=hash_fn).alias("sim"))
+    sh = _simhash_md5_exploded(df, text_col, id_col)
     # carry sim (8 bytes) through the bucket rows: the signature is the
     # expensive expression — computing it once and shuffling it beats
     # joining the full table back twice for verification
@@ -523,34 +395,11 @@ def simhash_candidates(df: DataFrame, text_col: str, id_col: str,
             for i in range(4)
         ])).alias("chunk_idx", "chunk"),
     )
-    # cap membership pre-aggregation (spillable window, bounded buffer —
-    # the survivor set stays the deterministic min ids; Spark's
-    # WindowGroupLimit pushes the row_number cap below the exchange)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("chunk_idx", "chunk").orderBy("id")
-    capped = (chunks.withColumn("_rn", F.row_number().over(w))
-              .filter(F.col("_rn") <= max_bucket).drop("_rn"))
-    # pair generation: a within-bucket SELF-JOIN instead of
-    # collect_list + nested-transform explode.  The join's pair loop
-    # runs in whole-stage codegen with the hamming filter inlined
-    # (~2.3x at sf1.0: 6.5 s -> 2.9 s over 24M candidate pairs),
-    # whereas higher-order-function lambdas are interpreted per pair
-    # and materialize every candidate struct.  SHUFFLE_MERGE keeps the
-    # pair loop spillable and off the broadcast path at 100 TB (the
-    # capped bucket table scales with the corpus; both sides share one
-    # exchange subtree, which AQE reuses at runtime).
-    xor = F.col("sim_a").bitwiseXOR(F.col("sim_b"))
-    a = capped.select("chunk_idx", "chunk", F.col("id").alias("id_a"),
-                      F.col("sim").alias("sim_a"))
-    b = capped.select("chunk_idx", "chunk", F.col("id").alias("id_b"),
-                      F.col("sim").alias("sim_b"))
+    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
     return (
-        a.hint("SHUFFLE_MERGE").join(b.hint("SHUFFLE_MERGE"),
-                                     ["chunk_idx", "chunk"])
-        .filter((F.col("id_a") < F.col("id_b"))
-                & (F.bit_count(xor) <= max_hamming))
-        .select("id_a", "id_b", F.bit_count(xor).alias("hamming"))
+        capped_bucket_pairs(chunks, ["chunk_idx", "chunk"], max_bucket=max_bucket)
+        .filter(hamming <= max_hamming)
+        .select("id_a", "id_b", hamming.alias("hamming"))
         .distinct()
     )
 
@@ -569,33 +418,6 @@ def _norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
-
-
-def hyperplane_buckets(vec: Column, planes_flat: Column,
-                       n_tables: int, n_planes: int, dim: int) -> Column:
-    """All tables' sign-bit buckets at once: ``array<long>`` of length
-    ``n_tables``.  ``planes_flat`` is the row-major T×P×dim plane
-    tensor as one flat array<double> column — shipped as a broadcast
-    1-row DataFrame by the caller, NOT inlined as literals (16k lit()
-    elements cost ~8 s of py4j driver time, and the unrolled per-plane
-    expression tree costs seconds of janino compile).  Each plane is a
-    runtime ``slice``; the dots run as ``aggregate`` loops, keeping
-    whole-stage codegen small and the stage embarrassingly parallel."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_tables - 1)),
-        lambda t: F.aggregate(
-            F.sequence(F.lit(0), F.lit(n_planes - 1)),
-            F.lit(0).cast("long"),
-            lambda acc, p: acc.bitwiseOR(
-                F.when(
-                    _dot(vec, F.slice(planes_flat,
-                                      (t * n_planes + p) * dim + 1, dim)) >= 0,
-                    F.call_function("shiftleft", F.lit(1).cast("long"),
-                                    p.cast("int")),
-                ).otherwise(F.lit(0).cast("long"))
-            ),
-        ),
-    )
 
 
 def embedding_near_duplicates(

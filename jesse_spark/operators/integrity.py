@@ -14,30 +14,28 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _maybe_broadcast(ref: DataFrame, broadcast_ref: bool) -> DataFrame:
-    return F.broadcast(ref) if broadcast_ref else ref
+def _ref_keys(ref: DataFrame, key: str, ref_key: str | None,
+              broadcast_ref: bool) -> DataFrame:
+    # no distinct: a semi join is EXISTS and an anti join NOT EXISTS, so
+    # duplicate reference keys never change the answer — deduplicating
+    # them would only add a shuffle
+    r = ref.select(F.col(ref_key or key).alias(key))
+    return F.broadcast(r) if broadcast_ref else r
 
 
 def ri_valid(df: DataFrame, key: str, ref: DataFrame, ref_key: str | None = None,
-             *, broadcast_ref: bool = True,
-             distinct_ref: bool = True) -> DataFrame:
-    """``distinct_ref=False`` skips the pre-dedup shuffle of the
-    reference keys — semantically free for a semi join (EXISTS), and
-    the right call when the ref key is a primary key: the dedup only
-    pays off when the reference side carries many duplicate keys into
-    a shuffled join (r6)."""
-    ref_key = ref_key or key
-    r = ref.select(F.col(ref_key).alias(key))
-    if distinct_ref:
-        r = r.distinct()
-    return df.join(_maybe_broadcast(r, broadcast_ref), on=key, how="left_semi")
+             *, broadcast_ref: bool = True) -> DataFrame:
+    """Rows of ``df`` whose ``key`` exists in ``ref`` (left semi join)."""
+    return df.join(_ref_keys(ref, key, ref_key, broadcast_ref), on=key,
+                   how="left_semi")
 
 
 def ri_violations(df: DataFrame, key: str, ref: DataFrame, ref_key: str | None = None,
                   *, broadcast_ref: bool = True) -> DataFrame:
-    ref_key = ref_key or key
-    r = _maybe_broadcast(ref.select(F.col(ref_key).alias(key)).distinct(), broadcast_ref)
-    return df.join(r, on=key, how="left_anti")
+    """Rows of ``df`` whose ``key`` is missing from ``ref`` (left anti
+    join)."""
+    return df.join(_ref_keys(ref, key, ref_key, broadcast_ref), on=key,
+                   how="left_anti")
 
 
 def ri_violation_rows(df: DataFrame, key: str, ref: DataFrame,

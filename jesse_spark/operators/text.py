@@ -103,18 +103,11 @@ def quality_features(df: DataFrame, text_col: str) -> DataFrame:
 
 def _char_trigrams(text: Column) -> Column:
     """Trigrams via substr — O(n²) seek; used only by the Column-level
-    lang_id.  with_lang_id stages a char array instead (O(n))."""
+    lang_id.  with_lang_id probes substrings instead (O(n))."""
     t = F.concat(F.lit(" "), normalized(text), F.lit(" "))
     n = F.greatest(F.length(t) - 2, F.lit(1))
     return F.array_distinct(
         F.transform(F.sequence(F.lit(1), n), lambda i: t.substr(i, F.lit(3))))
-
-
-def _trigrams_from_chars(chars: Column) -> Column:
-    n = F.greatest(F.size(chars) - 2, F.lit(1))
-    return F.array_distinct(
-        F.transform(F.sequence(F.lit(1), n),
-                    lambda i: F.concat_ws("", F.slice(chars, i, 3))))
 
 
 def _lang_scores(tri: Column) -> Column:
@@ -169,7 +162,7 @@ def with_lang_id(df: DataFrame, text_col: str, out: str = "pred_lang") -> DataFr
 
 def lang_id(text: Column) -> Column:
     """Column-expression variant (convenient for small data; prefer
-    :func:`with_lang_id` in pipelines — it stages the trigram array)."""
+    :func:`with_lang_id` in pipelines — it builds no trigram array)."""
     best = F.array_max(_lang_scores(_char_trigrams(text)))
     return F.when(best.getField("score") > 0, best.getField("lang")).otherwise(F.lit("und"))
 

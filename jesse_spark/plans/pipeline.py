@@ -50,22 +50,17 @@ def run_full_suite(
     *,
     schema: dict | None = None,
     with_audio: bool = True,
-    persist: bool = True,
     ignore_cols: tuple[str, ...] = ("_shard",),
     compile_opts: dict | None = None,
 ) -> SuiteResult:
-    """``persist=True`` caches a NARROW projection (no ``bytes``) of the
-    row-suite output so the four consumers (violation rows, verdicts,
-    uniqueness, RI) share one scan.  The audio stage re-reads ``bytes``
-    separately and filters with the codegen'd fail-fast conjunction
-    instead of rebuilding violation arrays — the decode UDF must never
-    see rows the keyword suite already rejected (jesse runs the
-    external validator only when keyword checks passed,
+    """Caches a NARROW projection (no ``bytes``) of the row-suite output
+    — the returned ``validated`` — so the four consumers (violation
+    rows, verdicts, uniqueness, RI) share one scan.  The audio stage
+    re-reads ``bytes`` separately and filters with the codegen'd
+    fail-fast conjunction instead of rebuilding violation arrays — the
+    decode UDF must never see rows the keyword suite already rejected
+    (jesse runs the external validator only when keyword checks passed,
     jesse_validator_draft4.erl:257-258 with allowed_errors=0).
-
-    At 10^12 rows set persist=False: the narrow projection no longer
-    fits cache economically and recomputing the codegen row suite per
-    consumer is cheaper than materialization.
 
     ``ignore_cols`` names harness columns (checkpoint shard ids etc.)
     that must stay OUT of the validated instance: the constraint schema
@@ -96,9 +91,7 @@ def run_full_suite(
         "violations", violations_array(checks, inst, preds))
         .withColumn("valid", F.size("violations") == 0))
 
-    narrow = validated.drop("bytes")
-    if persist:
-        narrow = narrow.persist(StorageLevel.MEMORY_AND_DISK)
+    narrow = validated.drop("bytes").persist(StorageLevel.MEMORY_AND_DISK)
 
     row_v = violation_rows(narrow, ["clip_id"])
 

@@ -173,6 +173,25 @@ def validate(
     )
 
 
+def _element_violation_rows(df: DataFrame, elems: Column, checks: Sequence[Check],
+                            col: str, key_cols: Sequence[str]) -> DataFrame:
+    """Violation rows of each element of the array ``elems``, with the
+    element index in the JSON pointer (``/col/<i>/...``)."""
+    exploded = df.select(*key_cols, F.posexplode(elems).alias("_pos", "_elem"))
+    validated = with_violations(exploded, checks, instance=F.col("_elem"))
+    return (
+        validated.filter(F.size("violations") > 0)
+        .select(*key_cols, "_pos", F.explode("violations").alias("v"))
+        .select(
+            *key_cols,
+            F.col("v.constraint").alias("constraint"),
+            F.concat(F.lit(f"/{col}/"), F.col("_pos").cast("string"),
+                     F.col("v.path")).alias("path"),
+            F.col("v.observed").alias("observed"),
+        )
+    )
+
+
 def variant_array_violation_rows(
     df: DataFrame,
     variant_col: str,
@@ -197,22 +216,9 @@ def variant_array_violation_rows(
 
     checks = compile_variant_checks(item_schema, registry=registry, draft=draft)
     v = F.col(variant_col)
-    exploded = df.filter(v.isNotNull() & is_array(v)).select(
-        *key_cols,
-        F.posexplode(v.cast("array<variant>")).alias("_pos", "_elem"),
-    )
-    validated = with_violations(exploded, checks, instance=F.col("_elem"))
-    return (
-        validated.filter(F.size("violations") > 0)
-        .select(*key_cols, "_pos", F.explode("violations").alias("v"))
-        .select(
-            *key_cols,
-            F.col("v.constraint").alias("constraint"),
-            F.concat(F.lit(f"/{variant_col}/"), F.col("_pos").cast("string"),
-                     F.col("v.path")).alias("path"),
-            F.col("v.observed").alias("observed"),
-        )
-    )
+    return _element_violation_rows(df.filter(v.isNotNull() & is_array(v)),
+                                   v.cast("array<variant>"), checks,
+                                   variant_col, key_cols)
 
 
 def array_violation_rows(
@@ -241,20 +247,5 @@ def array_violation_rows(
     checks = compile_checks(item_schema, dtype.elementType,
                             registry=registry, draft=draft,
                             null_is_absent=False)
-    exploded = df.select(
-        *key_cols,
-        F.posexplode(F.col(array_col)).alias("_pos", "_elem"),
-    )
-    validated = with_violations(
-        exploded, checks, instance=F.col("_elem"))
-    return (
-        validated.filter(F.size("violations") > 0)
-        .select(*key_cols, "_pos", F.explode("violations").alias("v"))
-        .select(
-            *key_cols,
-            F.col("v.constraint").alias("constraint"),
-            F.concat(F.lit(f"/{array_col}/"), F.col("_pos").cast("string"),
-                     F.col("v.path")).alias("path"),
-            F.col("v.observed").alias("observed"),
-        )
-    )
+    return _element_violation_rows(df, F.col(array_col), checks, array_col,
+                                   key_cols)

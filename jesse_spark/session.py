@@ -50,7 +50,7 @@ def get_spark(
     return b.getOrCreate()
 
 
-def ensure_parallelism(df, min_parts: int | None = None):
+def ensure_parallelism(df):
     """Repartition UP when the scan yields fewer partitions than cores.
 
     A small single-row-group parquet file cannot be split by the
@@ -61,8 +61,7 @@ def ensure_parallelism(df, min_parts: int | None = None):
     already produces thousands of splits (>= defaultParallelism), so no
     shuffle is added — the guard only fires in the small-file regime
     where the shuffle is cheap by construction."""
-    sc = df.sparkSession.sparkContext
-    target = min_parts or sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

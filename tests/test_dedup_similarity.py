@@ -2,6 +2,7 @@
 
 import numpy as np
 import pytest
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from jesse_spark.operators.dedup import (
@@ -10,6 +11,7 @@ from jesse_spark.operators.dedup import (
     drop_exact_duplicates,
     jaccard_verify,
     minhash_lsh_candidates,
+    normalized,
     simhash_candidates,
 )
 from jesse_spark.operators.similarity import (
@@ -17,10 +19,93 @@ from jesse_spark.operators.similarity import (
     build_ivf_index,
     ivf_search,
     ivf_topk,
-    ivf_topk_exact,
     train_ivf_centroids,
-    train_ivf_index,
 )
+
+
+# ---------------------------------------------------------------------------
+# reference formulations the shipped operators are pinned against
+# ---------------------------------------------------------------------------
+def capped_id_buckets(tagged: DataFrame, key_cols: list[str], *,
+                      max_bucket: int) -> DataFrame:
+    """Bucket key → sorted list of its ``max_bucket`` smallest ids
+    (buckets of one id dropped)."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(*key_cols).orderBy("id")
+    capped = tagged.withColumn("_rn", F.row_number().over(w)).filter(
+        F.col("_rn") <= max_bucket)
+    return (
+        capped.groupBy(*key_cols)
+        .agg(F.sort_array(F.collect_list("id")).alias("ids"))
+        .filter(F.size("ids") > 1)
+    )
+
+
+def bucket_pairs(buckets: DataFrame, ids_col: str = "ids") -> DataFrame:
+    """Explode each bucket's sorted id list into (id_a < id_b) pairs
+    with nested transforms — the collect_list formulation that
+    capped_bucket_pairs' self-join replaced."""
+    ids = F.col(ids_col)
+    return buckets.select(
+        F.explode(
+            F.flatten(
+                F.transform(
+                    F.sequence(F.lit(1), F.size(ids) - 1),
+                    lambda i: F.transform(
+                        F.sequence(i + 1, F.size(ids)),
+                        lambda j: F.struct(
+                            F.element_at(ids, i).alias("id_a"),
+                            F.element_at(ids, j).alias("id_b"),
+                        ),
+                    ),
+                )
+            )
+        ).alias("p")
+    ).select("p.id_a", "p.id_b")
+
+
+def simhash64(text: Column) -> Column:
+    """64-bit md5 SimHash of the token set as one per-row
+    higher-order-function expression: per token, bit b is bit ``b % 4``
+    of hex digit ``b // 4`` of ``md5(token)``; per bit, sum +1/-1 token
+    votes; the bit is set when the sum is positive."""
+    toks = F.array_distinct(F.split(F.trim(normalized(text)), " "))
+    # 16 hex digits → 4 bits each
+    tok_bits = F.transform(
+        toks,
+        lambda t: F.flatten(
+            F.transform(
+                F.transform(
+                    F.slice(F.split(F.md5(t), ""), 1, 16),
+                    lambda c: F.conv(c, 16, 10).cast("int"),
+                ),
+                lambda d: F.array(*[
+                    F.shiftright(d, s).bitwiseAND(F.lit(1)) for s in range(4)
+                ]),
+            )
+        ),
+    )
+    votes = F.aggregate(
+        tok_bits,
+        F.array_repeat(F.lit(0).cast("long"), 64),
+        lambda acc, bits: F.zip_with(
+            acc, bits, lambda x, y: x + 2 * y.cast("long") - 1
+        ),
+    )
+    return F.aggregate(
+        F.zip_with(
+            votes,
+            F.sequence(F.lit(0), F.lit(63)),
+            lambda v, b: F.when(
+                v > 0,
+                F.call_function("shiftleft", F.lit(1).cast("long"), b.cast("int")),
+            ).otherwise(F.lit(0).cast("long")),
+        ),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc.bitwiseOR(x),
+    )
+
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat sleeps "
@@ -118,29 +203,31 @@ def test_capped_bucket_pairs_equals_exploded_formulation(spark):
     """r6 pins: the codegen self-join pairing (capped_bucket_pairs)
     emits exactly the pair set of the historical collect_list +
     nested-transform explode, on multi-column bucket keys and with the
-    cap binding (min-id survivors)."""
+    cap binding (min-id survivors); a non-key column rides along as
+    ``<c>_a`` / ``<c>_b``."""
     import random
 
-    from jesse_spark.operators.dedup import (_capped_id_buckets,
-                                             bucket_pairs,
-                                             capped_bucket_pairs)
+    from jesse_spark.operators.dedup import capped_bucket_pairs
 
     rng = random.Random(7)
     # 6 buckets across 2 key columns; one hot bucket of 40 ids (cap 10
     # binds), singleton buckets (emit nothing), ids inserted unsorted
-    rows = [(t, b, i) for t in range(2) for b in range(3)
+    rows = [(t, b, i, i * 3) for t in range(2) for b in range(3)
             for i in rng.sample(range(1000), {0: 40, 1: 7, 2: 1}[b])]
     rng.shuffle(rows)
     tagged = spark.createDataFrame(
-        rows, "table_idx int, bucket int, id long")
-    want = sorted(map(tuple, bucket_pairs(_capped_id_buckets(
+        rows, "table_idx int, bucket int, id long, v long")
+    want = sorted(map(tuple, bucket_pairs(capped_id_buckets(
         tagged, ["table_idx", "bucket"], max_bucket=10))
         .select("id_a", "id_b").collect()))
-    have = sorted(map(tuple, capped_bucket_pairs(
-        tagged, ["table_idx", "bucket"], max_bucket=10)
-        .select("id_a", "id_b").collect()))
+    got = capped_bucket_pairs(tagged, ["table_idx", "bucket"], max_bucket=10)
+    assert got.columns == ["id_a", "id_b", "v_a", "v_b"]
+    got = got.collect()
+    have = sorted((r["id_a"], r["id_b"]) for r in got)
     assert want == have and len(have) == 2 * (10 * 9 // 2 + 7 * 6 // 2)
     assert all(a < b for a, b in have)
+    assert all(r["v_a"] == 3 * r["id_a"] and r["v_b"] == 3 * r["id_b"]
+               for r in got)
 
 
 def test_minhash_candidates_match_exploded_band_formulation(spark):
@@ -151,10 +238,7 @@ def test_minhash_candidates_match_exploded_band_formulation(spark):
     formulation, band_votes included."""
     from pyspark.sql import functions as F
 
-    from jesse_spark.operators.dedup import (_capped_id_buckets,
-                                             bucket_pairs,
-                                             minhash_signatures,
-                                             with_shingles)
+    from jesse_spark.operators.dedup import minhash_signatures, with_shingles
     from jesse_spark.session import ensure_parallelism
 
     rows = [(i, f"some shared text plus token{i % 7} and token{i % 3}")
@@ -182,7 +266,7 @@ def test_minhash_candidates_match_exploded_band_formulation(spark):
             for i in range(r)]))
         for b in range(bands)])).alias("band", "band_hash"))
     exploded = (bucket_pairs(
-        _capped_id_buckets(banded, ["band", "band_hash"], max_bucket=1000))
+        capped_id_buckets(banded, ["band", "band_hash"], max_bucket=1000))
         .groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("band_votes")))
     want = {(r_["id_a"], r_["id_b"]): r_["band_votes"]
             for r_ in exploded.collect()}
@@ -257,28 +341,37 @@ def test_simhash_bucket_cap_bounded(spark):
 
 def test_simhash_exploded_sig_matches_column_expression(spark):
     """r6 pins: the explode + conditional-sum md5 signature is
-    bit-for-bit simhash64(hash_fn='md5'), including empty strings and
-    unicode tokens."""
-    from jesse_spark.operators.dedup import (_simhash_md5_exploded,
-                                             simhash64)
+    bit-for-bit the per-row expression simhash64, including empty
+    strings and unicode tokens."""
+    from jesse_spark.operators.dedup import _simhash_md5_exploded
 
     rows = [(0, "the quick brown fox"), (1, ""), (2, "  spaced   out  "),
             (3, "тест слово при über naïve"), (4, "one"),
             (5, "a a a repeated a tokens a")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     want = {r["doc_id"]: r["sim"] for r in df.select(
-        "doc_id", simhash64(F.col("text"), hash_fn="md5").alias("sim")).collect()}
+        "doc_id", simhash64(F.col("text")).alias("sim")).collect()}
     got = {r["id"]: r["sim"]
            for r in _simhash_md5_exploded(df, "text", "doc_id").collect()}
     assert want == got
 
 
 def test_simhash_hash_fns_agree_on_clear_dups(docs):
-    for fn in ("md5", "xxhash64"):
-        pairs = {(r["id_a"], r["id_b"])
-                 for r in simhash_candidates(docs, "text", "doc_id",
-                                             max_hamming=6, hash_fn=fn).collect()}
-        assert (0, 1) in pairs
+    """The shipped exploded md5 signature and the per-row reference
+    expression both put the clear-dup pair (0, 1) within hamming 6, and
+    simhash_candidates reports it."""
+    from jesse_spark.operators.dedup import _simhash_md5_exploded
+
+    exploded = {r["id"]: r["sim"]
+                for r in _simhash_md5_exploded(docs, "text", "doc_id").collect()}
+    reference = {r["doc_id"]: r["sim"] for r in docs.select(
+        "doc_id", simhash64(F.col("text")).alias("sim")).collect()}
+    for sig in (exploded, reference):
+        assert bin((sig[0] ^ sig[1]) & (2**64 - 1)).count("1") <= 6
+    pairs = {(r["id_a"], r["id_b"])
+             for r in simhash_candidates(docs, "text", "doc_id",
+                                         max_hamming=6).collect()}
+    assert (0, 1) in pairs
 
 
 def test_embedding_near_dups_multi_table_recall(spark):
@@ -305,15 +398,17 @@ def test_ivf_exact_equals_brute_force(vectors):
     force must hold for any k and any (deterministic) centroids."""
     rows = vectors.orderBy("vec_id").collect()
     q = rows[3]["embedding"]
-    cents, radii = train_ivf_index(vectors, "embedding", "vec_id", n_cells=4,
-                                   sample=32)
-    for k in (1, 3, 7):
-        got = [(r["id"], round(r["cosine"], 9)) for r in
-               ivf_topk_exact(vectors, "embedding", "vec_id", q,
-                              centroids=cents, radii=radii, k=k).collect()]
-        exp = [(r["id"], round(r["cosine"], 9)) for r in
-               brute_force_topk(vectors, "embedding", "vec_id", q, k=k).collect()]
-        assert got == exp
+    idx = build_ivf_index(vectors, "embedding", "vec_id", n_cells=4, sample=32)
+    try:
+        for k in (1, 3, 7):
+            got = [(r["id"], round(r["cosine"], 9)) for r in
+                   ivf_search(idx, q, k=k).collect()]
+            exp = [(r["id"], round(r["cosine"], 9)) for r in
+                   brute_force_topk(vectors, "embedding", "vec_id", q,
+                                    k=k).collect()]
+            assert got == exp
+    finally:
+        idx.unpersist()
 
 
 def test_ivf_index_search_equals_brute_force(vectors):
@@ -328,13 +423,9 @@ def test_ivf_index_search_equals_brute_force(vectors):
             got = [(r["id"], round(r["cosine"], 9)) for r in
                    ivf_search(idx, q, k=k).collect()]
             exp = [(r["id"], round(r["cosine"], 9)) for r in
-                   brute_force_topk(vectors, "embedding", "vec_id", q, k=k).collect()]
+                   brute_force_topk(vectors, "embedding", "vec_id", q,
+                                    k=k).collect()]
             assert got == exp
-        # index agrees with the uncached trainer on centroids + radii
-        cents, radii = train_ivf_index(vectors, "embedding", "vec_id",
-                                       n_cells=4, sample=32)
-        assert idx.centroids == cents
-        assert [round(r, 12) for r in idx.radii] == [round(r, 12) for r in radii]
     finally:
         idx.unpersist()
 

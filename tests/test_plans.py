@@ -17,6 +17,8 @@ test and should be a conscious decision.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 SF = "/root/testdata/sf0.001"
@@ -37,6 +39,16 @@ def queries():
 
 def _plan(spark, queries, name: str, mode: str = "simple") -> str:
     return plan_str(spark, queries[name](spark, SF), mode)
+
+
+def _pair_joins(p: str) -> list[str]:
+    """SortMergeJoin lines carrying capped_bucket_pairs' ``id_a < id_b``
+    pairing predicate."""
+    return [l for l in p.splitlines() if "SortMergeJoin" in l
+            and re.search(r"\(id_a#\d+L? < id_b#\d+L?\)", l)]
+
+
+NEAR_DUPS = ("minhash_near_dups", "simhash_near_dups", "embedding_near_dups")
 
 
 # ---------------------------------------------------------------------------
@@ -72,9 +84,9 @@ def test_embedding_near_dups_single_broadcast_tensor(spark, queries):
     # late r6: pairing is the capped_bucket_pairs SMJ self-join; the
     # static plan prints the shared capped subtree once per join side,
     # raising the printed Exchange count 8 → 9, but at runtime AQE
-    # reuses the identical exchanges (2 ReusedExchange verified in the
-    # executed plan) so the executed shuffle count does not grow
-    assert "SortMergeJoin" in p, "pair loop must stay the codegen join"
+    # reuses the identical exchanges (test_near_dups_reuse_exchange) so
+    # the executed shuffle count does not grow
+    assert len(_pair_joins(p)) == 1, "pair loop must stay the codegen join"
     assert p.count("Exchange") <= 9
 
 
@@ -86,8 +98,8 @@ def test_minhash_near_dups_no_cartesian_capped_buckets(spark, queries):
     # late r6: capped_bucket_pairs SMJ self-join pairing — static plan
     # duplicates the shared banded subtree per join side (7 → 9
     # printed Exchanges); AQE reuses the identical exchanges at
-    # runtime (2 ReusedExchange verified in the executed plan)
-    assert "SortMergeJoin" in p, "pair loop must stay the codegen join"
+    # runtime (test_near_dups_reuse_exchange)
+    assert len(_pair_joins(p)) == 1, "pair loop must stay the codegen join"
     assert p.count("Exchange") <= 9
 
 
@@ -96,16 +108,27 @@ def test_simhash_near_dups_no_cartesian_capped_buckets(spark, queries):
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
     assert "Window" in p, "capped bucket pre-agg (row_number) missing"
-    # r6: pair generation is a within-bucket SMJ self-join (codegen'd
-    # pair loop) instead of collect_list + interpreted HOF explode, and
-    # the md5 signature is an explode + codegen vote aggregation.  The
-    # static plan prints the shared capped-bucket subtree once per join
-    # side (2 × (repartition + sig groupBy + window exchange) + 1
-    # distinct = 7); at runtime AQE reuses the identical exchanges, so
-    # the executed shuffle count stays 4 (repartition, sig, window,
-    # distinct)
-    assert "SortMergeJoin" in p, "pair loop must stay the codegen join"
+    # r6: pair generation is the capped_bucket_pairs SMJ self-join
+    # (codegen'd pair loop, hamming filter inlined) instead of
+    # collect_list + interpreted HOF explode, and the md5 signature is
+    # an explode + codegen vote aggregation.  The static plan prints the
+    # shared capped-bucket subtree once per join side (2 × (repartition
+    # + sig groupBy + window exchange) + 1 distinct = 7); at runtime AQE
+    # reuses the identical exchanges, so the executed shuffle count
+    # stays 4 (repartition, sig, window, distinct)
+    assert len(_pair_joins(p)) == 1, "pair loop must stay the codegen join"
     assert p.count("Exchange") <= 7
+
+
+@pytest.mark.parametrize("name", NEAR_DUPS)
+def test_near_dups_reuse_exchange(spark, queries, name):
+    # both sides of the pairing self-join read one capped subtree: the
+    # final adaptive plan must reuse its exchange, not shuffle it twice
+    df = queries[name](spark, SF)
+    df.collect()
+    p = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in p
+    assert "ReusedExchange" in p, f"{name}: pairing sides no longer share a shuffle"
 
 
 # ---------------------------------------------------------------------------

@@ -58,6 +58,24 @@ def test_ri_joins(spark):
     assert "Broadcast" in plan  # dim side must broadcast
 
 
+def test_ri_duplicate_reference_keys(spark):
+    """Semi/anti joins are EXISTS / NOT EXISTS: repeating every
+    reference key changes neither the valid nor the orphan rows (which
+    is why the reference side is never deduplicated)."""
+    from jesse_spark.operators.integrity import ri_valid
+
+    orders = spark.read.parquet(f"{SF}/orders.parquet")
+    once = spark.read.parquet(f"{SF}/customer.parquet").filter(
+        F.col("c_custkey") % 2 == 0).select("c_custkey")
+    thrice = once.unionAll(once).unionAll(once)
+    for broadcast_ref in (True, False):
+        for op in (ri_valid, ri_violations):
+            a, b = (sorted(op(orders, "o_custkey", ref, "c_custkey",
+                              broadcast_ref=broadcast_ref).collect())
+                    for ref in (once, thrice))
+            assert a == b and len(a) > 0, (op.__name__, broadcast_ref)
+
+
 def test_drift_identical_vs_shifted(spark):
     ev = spark.read.parquet(f"{SF}/events.parquet")
     a = ev.filter(F.col("event_id") % 2 == 0)
